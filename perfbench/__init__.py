@@ -1,0 +1,1 @@
+"""Warehouse benchmark: seeded workloads, output checks, per-layer tracing."""
