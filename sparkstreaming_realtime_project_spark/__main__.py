@@ -55,6 +55,19 @@ def _start(writer, follow: bool, timeout: float | None = None):
         sys.exit(0 if ok else 1)
 
 
+def publisher_providers(spark, dau_table: str, wide_table: str):
+    """The publisher's (dau, wide) providers over the pipelines' sink
+    dirs, re-read per request through ``read_sink`` so each query sees
+    the latest committed state, like the reference hitting live ES. The
+    order-wide sink's ``create_date`` is served as ``dt``."""
+    from .streaming.sinks import read_sink
+
+    return (
+        lambda: read_sink(spark, dau_table),
+        lambda: read_sink(spark, wide_table).withColumnRenamed("create_date", "dt"),
+    )
+
+
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(prog="sparkstreaming_realtime_project_spark")
     sub = ap.add_subparsers(dest="app", required=True)
@@ -174,8 +187,8 @@ def main(argv: list[str] | None = None) -> None:
     # Spark jobs (PublisherApplication.java); same topology here — a
     # sidecar serving the sink tables the pipelines write
     p = sub.add_parser("publisher", help="REST façade over the sink tables")
-    p.add_argument("--dau-table", required=True, help="dau_info parquet dir")
-    p.add_argument("--wide-table", required=True, help="order_wide parquet dir")
+    p.add_argument("--dau-table", required=True, help="dau pipeline sink dir")
+    p.add_argument("--wide-table", required=True, help="order-wide pipeline sink dir")
     p.add_argument("--host", default="127.0.0.1")
     p.add_argument("--port", type=int, default=8070)
 
@@ -270,11 +283,8 @@ def main(argv: list[str] | None = None) -> None:
     if args.app == "publisher":
         from .http_api import publisher_server
 
-        # providers re-read per request: each query sees the pipelines'
-        # latest committed files, like the reference hitting live ES
         server = publisher_server(
-            lambda: spark.read.parquet(args.dau_table),
-            lambda: spark.read.parquet(args.wide_table),
+            *publisher_providers(spark, args.dau_table, args.wide_table),
             host=args.host,
             port=args.port,
         )

@@ -36,6 +36,7 @@ sidecar exactly like the reference's Spring app beside the Spark jobs.
 
 from __future__ import annotations
 
+import datetime
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -54,6 +55,13 @@ from .plans.publisher import (
 Provider = Callable[[], DataFrame]
 
 
+def _json_date(o):
+    # a date-partitioned sink's partition column reads back as DATE
+    if isinstance(o, datetime.date):
+        return o.isoformat()  # yyyy-MM-dd
+    raise TypeError(f"{type(o).__name__} is not JSON serializable")
+
+
 def _as_provider(x: DataFrame | Provider) -> Provider:
     return x if callable(x) else (lambda: x)
 
@@ -67,7 +75,9 @@ class _Handler(BaseHTTPRequestHandler):
         pass
 
     def _send(self, code: int, payload) -> None:
-        body = json.dumps(payload, ensure_ascii=False).encode("utf-8")
+        body = json.dumps(payload, ensure_ascii=False, default=_json_date).encode(
+            "utf-8"
+        )
         self.send_response(code)
         self.send_header("Content-Type", "application/json; charset=utf-8")
         self.send_header("Content-Length", str(len(body)))

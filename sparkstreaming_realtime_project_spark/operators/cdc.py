@@ -33,10 +33,26 @@ def _op_decode():
 
 
 def parse_cdc(raw: DataFrame, value_col: str = "value") -> DataFrame:
-    """P1 for the DB stream (OdsBaseDbApp.scala:65-71)."""
+    """P1 for the DB stream (OdsBaseDbApp.scala:65-71). The line rides
+    along as ``_raw`` for :func:`corrupt_cdc`; outputs that select
+    their columns prune it."""
     return raw.select(
-        F.from_json(F.col(value_col), CDC_ENVELOPE_SCHEMA).alias("m")
-    ).select("m.*")
+        F.col(value_col).alias("_raw"),
+        F.from_json(F.col(value_col), CDC_ENVELOPE_SCHEMA).alias("m"),
+    ).select("_raw", "m.*")
+
+
+def corrupt_cdc(parsed: DataFrame) -> DataFrame:
+    """Dead-letter output (the log split's ``corrupt_log`` contract):
+    envelopes with no routable (table, type), which would vanish at the
+    routing filters, as the raw line plus a diagnosis."""
+    reason = F.when(
+        F.col("table").isNull() & F.col("type").isNull(),
+        F.lit("malformed_json"),
+    ).otherwise(F.lit("unroutable_envelope"))
+    return parsed.filter(F.col("table").isNull() | F.col("type").isNull()).select(
+        F.col("_raw").alias("raw_value"), reason.alias("reason")
+    )
 
 
 def decode_op(parsed: DataFrame) -> DataFrame:
@@ -114,6 +130,38 @@ def route_dims(decoded: DataFrame, dim_tables: list[str]) -> DataFrame:
         F.col("data").alias("value"),
         F.col("op"),
         F.col("ts"),
+    )
+
+
+def keep_latest(df: DataFrame, key_cols: list[str], order: list) -> DataFrame:
+    """The one keep-latest rule of every upsert (the dim upsert below and
+    the sinks in streaming/sinks.py): per ``key_cols``, the first row
+    under ``order`` (sort Columns, newest first, then the tie-breaks that
+    make the winner deterministic) survives."""
+    w = Window.partitionBy(*key_cols).orderBy(*order)
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
+def latest_dims(decoded: DataFrame, dim_tables: list[str]) -> DataFrame:
+    """K5: the in-batch dim upsert — one row per (table, id), last write
+    wins by ts (Redis SET semantics, OdsBaseDbApp.scala:144-163), a
+    deterministic winner rather than dropDuplicates' arbitrary row.
+    Equal-ts ties break on op precedence (delete > update > insert >
+    bootstrap-insert: the op that would have reached Redis last wins),
+    then the serialized value, so reruns pick the same row."""
+    op_rank = (
+        F.when(F.col("op") == "D", 2)
+        .when(F.col("op") == "U", 1)
+        .otherwise(0)  # I (insert / bootstrap-insert)
+    )
+    return keep_latest(
+        route_dims(decoded, dim_tables),
+        ["table", "id"],
+        [F.col("ts").desc(), op_rank.desc(), F.col("value").desc()],
     )
 
 

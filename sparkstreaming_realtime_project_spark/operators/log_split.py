@@ -186,13 +186,18 @@ def start_log(parsed: DataFrame) -> DataFrame:
     )
 
 
+# The full 5-way split (OdsBaseLogApp.scala:93-208), name -> output function
+# of the parsed frame. One input record fans out to 0..(1+|displays|+|actions|)
+# rows across outputs.
+SPLIT_OUTPUTS = {
+    "error": error_log,
+    "page": page_log,
+    "display": page_display_log,
+    "action": page_action_log,
+    "start": start_log,
+}
+
+
 def split_all(parsed: DataFrame) -> dict[str, DataFrame]:
-    """The full 5-way split (OdsBaseLogApp.scala:93-208). One input record
-    fans out to 0..(1+|displays|+|actions|) rows across outputs."""
-    return {
-        "error": error_log(parsed),
-        "page": page_log(parsed),
-        "display": page_display_log(parsed),
-        "action": page_action_log(parsed),
-        "start": start_log(parsed),
-    }
+    """Every routed output of :data:`SPLIT_OUTPUTS` over one parsed frame."""
+    return {name: fn(parsed) for name, fn in SPLIT_OUTPUTS.items()}

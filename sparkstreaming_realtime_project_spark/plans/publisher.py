@@ -29,10 +29,10 @@ from .serving import (
 )
 
 
-def dau_realtime_json(dau: DataFrame, td: str, key: str = "mid") -> dict:
+def dau_realtime_json(dau: DataFrame, td: str) -> dict:
     """GET /dauRealtime?td= (PublisherController.java:26-33):
     {"dauTotal": N, "dauTd": {"HH": ct, ...}, "dauYd": {...}}."""
-    plans = dau_realtime(dau, td, key)
+    plans = dau_realtime(dau, td)
     total_rows = plans["dauTotal"].collect()
     return {
         "dauTotal": total_rows[0]["dau_total"] if total_rows else 0,

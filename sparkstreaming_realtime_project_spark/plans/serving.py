@@ -20,7 +20,17 @@ from pyspark.sql import functions as F
 from ..functions.text import highlight, text_match
 
 
-def dau_realtime(dau: DataFrame, td: str, key: str = "mid") -> dict[str, DataFrame]:
+def _matched(wide: DataFrame, date: str, item_name: str) -> DataFrame:
+    """One day's partition of the order-wide table (its create_date
+    exposed as ``dt``), AND-matched on sku_name."""
+    return wide.filter((F.col("dt") == date) & text_match(F.col("sku_name"), item_name))
+
+
+def _highlighted(page: DataFrame, item_name: str) -> DataFrame:
+    return page.withColumn("sku_name", highlight(F.col("sku_name"), item_name))
+
+
+def dau_realtime(dau: DataFrame, td: str) -> dict[str, DataFrame]:
     """A1+A2+A3 (PublisherMapperImpl.java:51-125): total deduped actives for
     date *td*, hourly histogram for td, and the same histogram for td-1.
 
@@ -32,9 +42,9 @@ def dau_realtime(dau: DataFrame, td: str, key: str = "mid") -> dict[str, DataFra
     both = (
         dau.filter(F.col("dt").isin([td]) | (F.col("dt") == yd))
         .groupBy("dt", "hr")
-        .agg(F.count(key).alias("ct"))
+        .agg(F.count("mid").alias("ct"))
     )
-    total = dau.filter(F.col("dt") == td).agg(F.count(key).alias("dau_total"))
+    total = dau.filter(F.col("dt") == td).agg(F.count("mid").alias("dau_total"))
     return {
         "dauTotal": total,
         "dauTd": both.filter(F.col("dt") == td).select("hr", "ct"),
@@ -42,43 +52,30 @@ def dau_realtime(dau: DataFrame, td: str, key: str = "mid") -> dict[str, DataFra
     }
 
 
-def stats_by_item(
-    wide: DataFrame,
-    item_name: str,
-    date: str,
-    t: str,
-    *,
-    name_col: str = "sku_name",
-    date_col: str = "dt",
-    gender_col: str = "user_gender",
-    age_col: str = "user_age",
-    amount_col: str = "split_total_amount",
-) -> DataFrame:
+def stats_by_item(wide: DataFrame, item_name: str, date: str, t: str) -> DataFrame:
     """A4-A6 (PublisherMapperImpl.java:136-176 + PublisherServiceImpl.
     java:49-86): AND-match on sku_name, group by gender or age band, sum
     amount. The reference re-buckets ages client-side (A5) and renames
     genders (A6); here both recodes are single ``when`` chains *inside*
     the aggregation — one pass, no post-processing."""
-    matched = wide.filter(
-        (F.col(date_col) == date) & text_match(F.col(name_col), item_name)
-    )
+    matched = _matched(wide, date, item_name)
     if t == "gender":
         grp = (
-            F.when(F.col(gender_col) == "F", "女")
-            .when(F.col(gender_col) == "M", "男")
-            .otherwise(F.col(gender_col))
+            F.when(F.col("user_gender") == "F", "女")
+            .when(F.col("user_gender") == "M", "男")
+            .otherwise(F.col("user_gender"))
         )
     elif t == "age":
         grp = (
-            F.when(F.col(age_col) < 20, "20岁以下")
-            .when(F.col(age_col) <= 29, "20岁到29岁")
+            F.when(F.col("user_age") < 20, "20岁以下")
+            .when(F.col("user_age") <= 29, "20岁到29岁")
             .otherwise("30岁及30岁以上")
         )
     else:
         raise ValueError(f"t must be 'gender' or 'age', got {t!r}")
     return (
         matched.groupBy(grp.alias("name"))
-        .agg(F.round(F.sum(amount_col), 2).alias("value"))
+        .agg(F.round(F.sum("split_total_amount"), 2).alias("value"))
         .orderBy("name")
     )
 
@@ -89,10 +86,6 @@ def detail_by_item(
     item_name: str,
     page_no: int = 1,
     page_size: int = 20,
-    *,
-    name_col: str = "sku_name",
-    date_col: str = "dt",
-    order_cols: tuple[str, ...] = ("create_time", "detail_id"),
 ) -> tuple[DataFrame, DataFrame]:
     """Paginated detail scan + highlight (PublisherServiceImpl.java:41-47,
     PublisherMapperImpl.java:181-233). Returns (total_df, page_df).
@@ -107,19 +100,14 @@ def detail_by_item(
     offset N only sorts the single day's matches (ES has the same
     window limit).
     """
-    matched = wide.filter(
-        (F.col(date_col) == date) & text_match(F.col(name_col), item_name)
-    )
+    matched = _matched(wide, date, item_name)
     total = matched.agg(F.count(F.lit(1)).alias("total"))
-    ordered = matched.orderBy(
-        F.col(order_cols[0]).desc(), *[F.col(c) for c in order_cols[1:]]
-    )
     page = (
-        ordered.offset((page_no - 1) * page_size)
+        matched.orderBy(F.col("create_time").desc(), F.col("detail_id"))
+        .offset((page_no - 1) * page_size)
         .limit(page_size)
-        .withColumn(name_col, highlight(F.col(name_col), item_name))
     )
-    return total, page
+    return total, _highlighted(page, item_name)
 
 
 def detail_by_item_keyset(
@@ -128,10 +116,6 @@ def detail_by_item_keyset(
     item_name: str,
     after: tuple | None = None,
     page_size: int = 20,
-    *,
-    name_col: str = "sku_name",
-    date_col: str = "dt",
-    order_cols: tuple[str, ...] = ("create_time", "detail_id"),
 ) -> DataFrame:
     """Keyset (ES `search_after`) pagination over the same deterministic
     (create_time DESC, detail_id ASC) order as `detail_by_item`:
@@ -148,18 +132,11 @@ def detail_by_item_keyset(
     (create_time, detail_id) order and is proven query-for-query by the
     `q_detail_keyset` catalog entry (oracle = the OFFSET form).
     """
-    ct, did = order_cols
-    matched = wide.filter(
-        (F.col(date_col) == date) & text_match(F.col(name_col), item_name)
-    )
+    ct, did = F.col("create_time"), F.col("detail_id")
+    matched = _matched(wide, date, item_name)
     if after is not None:
         after_ct, after_id = after
         matched = matched.filter(
-            (F.col(ct) < F.lit(after_ct))
-            | ((F.col(ct) == F.lit(after_ct)) & (F.col(did) > F.lit(after_id)))
+            (ct < F.lit(after_ct)) | ((ct == F.lit(after_ct)) & (did > F.lit(after_id)))
         )
-    return (
-        matched.orderBy(F.col(ct).desc(), F.col(did))
-        .limit(page_size)
-        .withColumn(name_col, highlight(F.col(name_col), item_name))
-    )
+    return _highlighted(matched.orderBy(ct.desc(), did).limit(page_size), item_name)

@@ -18,13 +18,11 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..functions.dates import derive_dt_hr
-from ..operators.cdc import decode_op, parse_cdc, route_dims, route_facts
-from ..schemas import CDC_ENVELOPE_SCHEMA
+from ..operators.cdc import corrupt_cdc, decode_op, latest_dims, parse_cdc, route_facts
 from ..operators.enrich import enrich_province, enrich_user
-from ..operators.log_split import parse_log, split_all
+from ..operators.log_split import SPLIT_OUTPUTS, corrupt_log, parse_log
 from .sinks import idempotent_partitioned_writer, split_writer
 
 
@@ -88,26 +86,16 @@ def dau_pipeline(
 
 def log_split_pipeline(raw_stream: DataFrame, out_root: str, checkpoint: str):
     """OdsBaseLogApp (OdsBaseLogApp.scala:30-213): one source, five routed
-    outputs from a single cached batch (§3.2), plus a SIXTH dead-letter
-    output: records no routed branch will carry (unparseable lines,
-    device-id-less envelopes) land in ``corrupt/`` with the raw line
-    and a diagnosis — ingest loss is observable and replayable, where
-    the reference NPEs in the executor and a naive rebuild drops
-    silently."""
-    from ..operators.log_split import corrupt_log
+    outputs (§3.2), plus a SIXTH dead-letter output: records no routed
+    branch will carry (unparseable lines, device-id-less envelopes) land
+    in ``corrupt/`` with the raw line and a diagnosis — ingest loss is
+    observable and replayable, where the reference NPEs in the executor
+    and a naive rebuild drops silently. Each raw batch is parsed once and
+    handed to :func:`split_writer`, which caches it and fans out."""
+    outputs = {**SPLIT_OUTPUTS, "corrupt": corrupt_log}
 
-    # foreachBatch receives the RAW batch; parse once, fan out six ways.
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        p = parse_log(batch_df, keep_raw=True).persist()
-        try:
-            outputs = {
-                name: (lambda b, n=name: split_all(b)[n])
-                for name in ("error", "page", "display", "action", "start")
-            }
-            outputs["corrupt"] = corrupt_log
-            split_writer(outputs, out_root)(p, batch_id)
-        finally:
-            p.unpersist()
+        split_writer(outputs, out_root)(parse_log(batch_df, keep_raw=True), batch_id)
 
     return (
         raw_stream.writeStream.foreachBatch(write)
@@ -118,14 +106,17 @@ def log_split_pipeline(raw_stream: DataFrame, out_root: str, checkpoint: str):
 
 def cdc_route_pipeline(
     raw_stream: DataFrame,
-    fact_tables: "list[str] | Callable[[], list[str]]",
-    dim_tables: "list[str] | Callable[[], list[str]]",
+    fact_tables: list[str] | Callable[[], list[str]],
+    dim_tables: list[str] | Callable[[], list[str]],
     out_root: str,
     checkpoint: str,
 ):
     """OdsBaseDbApp (OdsBaseDbApp.scala:35-170): Maxwell decode (P10),
     fact rows routed to per-topic outputs (P11 — locally one directory per
-    computed topic name), dim rows upserted by id (P12/K5).
+    computed topic name), dim rows upserted by id (P12/K5), plus the
+    ``corrupt/`` dead letter (:func:`corrupt_cdc`). Each raw batch is
+    parsed once and handed to :func:`split_writer`, which caches it and
+    writes each output in ONE job (partitionBy topic / table).
 
     S7/O6 dynamic config: the reference re-reads FACT:TABLES / DIM:TABLES
     from Redis and re-broadcasts them EVERY batch (OdsBaseDbApp.scala:
@@ -137,57 +128,14 @@ def cdc_route_pipeline(
     def write(batch_df: DataFrame, batch_id: int) -> None:
         facts_now = fact_tables() if callable(fact_tables) else fact_tables
         dims_now = dim_tables() if callable(dim_tables) else dim_tables
-        # dead-letter FIRST, from the raw batch: envelopes that decode to
-        # no routable (table, op) would otherwise vanish at the routing
-        # filters — same observable-ingest-loss contract as the log
-        # split's corrupt/ output
-        parsed_raw = batch_df.select(
-            F.col("value").alias("_raw"),
-            F.from_json(F.col("value"), CDC_ENVELOPE_SCHEMA).alias("m"),
-        ).select("_raw", "m.*")
-        reason = F.when(
-            F.col("table").isNull() & F.col("type").isNull(),
-            F.lit("malformed_json"),
-        ).otherwise(F.lit("unroutable_envelope"))
-        parsed_raw.filter(
-            F.col("table").isNull() | F.col("type").isNull()
-        ).select(F.col("_raw").alias("raw_value"), reason.alias("reason")).write.mode(
-            "overwrite"
-        ).parquet(f"{out_root}/corrupt/batch={batch_id}")
-        decoded = decode_op(parse_cdc(batch_df)).persist()
-        try:
-            # Single pass per side: partitionBy writes every topic/table
-            # directory in ONE job — no driver round-trip, no dependence on
-            # topic cardinality (replaces a collect()+filter-per-topic loop
-            # that rescanned the batch N times).
-            route_facts(decoded, facts_now).write.mode("overwrite").partitionBy(
-                "topic"
-            ).parquet(f"{out_root}/facts/batch={batch_id}")
-            # Dim upsert is last-write-wins by ts (Redis SET semantics,
-            # OdsBaseDbApp.scala:144-163) — deterministic winner, not
-            # dropDuplicates' arbitrary row. Equal-ts ties break on op
-            # precedence (delete > update > insert > bootstrap-insert:
-            # the op that would have reached Redis last wins) then the
-            # serialized value, so reruns pick the same row.
-            dims = route_dims(decoded, dims_now)
-            op_rank = (
-                F.when(F.col("op") == "D", 2)
-                .when(F.col("op") == "U", 1)
-                .otherwise(0)  # I (insert / bootstrap-insert)
-            )
-            w = Window.partitionBy("table", "id").orderBy(
-                F.col("ts").desc(), op_rank.desc(), F.col("value").desc()
-            )
-            latest = (
-                dims.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-            latest.write.mode("overwrite").partitionBy("table").parquet(
-                f"{out_root}/dims/batch={batch_id}"
-            )
-        finally:
-            decoded.unpersist()
+        outputs = {
+            "corrupt": corrupt_cdc,
+            "facts": lambda p: route_facts(decode_op(p), facts_now),
+            "dims": lambda p: latest_dims(decode_op(p), dims_now),
+        }
+        split_writer(outputs, out_root, {"facts": "topic", "dims": "table"})(
+            parse_cdc(batch_df), batch_id
+        )
 
     return (
         raw_stream.writeStream.foreachBatch(write)

@@ -17,10 +17,21 @@ idempotent writes.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from ..operators.cdc import keep_latest
+
+
+def _write_dir(df: DataFrame, path: str, partition_col: str | None) -> None:
+    """Overwrite one ``batch=<id>`` / ``gen=<n>`` dir, partitioned on
+    ``partition_col`` when given."""
+    writer = df.write.mode("overwrite")
+    if partition_col is not None:
+        writer = writer.partitionBy(partition_col)
+    writer.parquet(path)
 
 
 def idempotent_partitioned_writer(
@@ -44,19 +55,12 @@ def idempotent_partitioned_writer(
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         if order_col is not None:
-            w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
-            deduped = (
-                batch_df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+            deduped = keep_latest(batch_df, key_cols, [F.col(order_col).desc()])
         else:
             deduped = batch_df.dropDuplicates(key_cols)
-        target = os.path.join(out_dir, f"batch={batch_id}")
-        writer = deduped.write.mode("overwrite")
-        if partition_col is not None:
-            writer = writer.partitionBy(partition_col)
-        writer.parquet(target)
+        _write_dir(
+            deduped, os.path.join(out_dir, f"batch={batch_id}"), partition_col
+        )
 
     return write
 
@@ -273,10 +277,7 @@ def merge_into(
             )
         n_ins = keep.count()
         os.makedirs(out_dir, exist_ok=True)
-        writer = keep.write.mode("overwrite")
-        if partition_col is not None:
-            writer = writer.partitionBy(partition_col)
-        writer.parquet(os.path.join(out_dir, "gen=0"))
+        _write_dir(keep, os.path.join(out_dir, "gen=0"), partition_col)
         _commit_manifest(out_dir, {"gen": 0, "through_batch": -1})
         return {
             "gen": 0, "updated": 0, "deleted": 0,
@@ -339,11 +340,7 @@ def merge_into(
     all_batches = _batch_ids(out_dir)
     high = max([b for b in all_batches if b > through], default=through)
     new_gen = prev_gen + 1
-    gen_dir = os.path.join(out_dir, f"gen={new_gen}")
-    writer = merged.write.mode("overwrite")
-    if partition_col is not None:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(gen_dir)
+    _write_dir(merged, os.path.join(out_dir, f"gen={new_gen}"), partition_col)
     j.unpersist()
     committed = {"gen": new_gen, "through_batch": high}
     _commit_manifest(out_dir, committed)
@@ -403,13 +400,8 @@ def merge_stream_writer(
                 if others
                 else F.lit("")  # no payload cols -> ties are identical rows
             )
-            w = Window.partitionBy(*key_cols).orderBy(
-                F.col(order_col).desc(), tiebreak
-            )
-            src = (
-                batch_df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
+            src = keep_latest(
+                batch_df, key_cols, [F.col(order_col).desc(), tiebreak]
             )
         merge_into(
             batch_df.sparkSession,
@@ -489,39 +481,40 @@ def compact_sink(
     order = [F.col("batch").desc()]
     if order_col is not None:
         order.insert(0, F.col(order_col).desc())
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    winners = (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "batch")
-    )
+    winners = keep_latest(df, key_cols, order).drop("batch")
     new_gen = prev_gen + 1
-    gen_dir = os.path.join(out_dir, f"gen={new_gen}")
-    writer = winners.write.mode("overwrite")
-    if partition_col is not None:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(gen_dir)
+    _write_dir(winners, os.path.join(out_dir, f"gen={new_gen}"), partition_col)
     committed = {"gen": new_gen, "through_batch": high}
     _commit_manifest(out_dir, committed)
     # -- committed; everything below is reclaim, crash-safe to skip --
     _sweep(committed)
 
 
-def split_writer(outputs: dict[str, "DataFrameFn"], out_root: str):
-    """K1/P11 local equivalent of the 5-topic split sink: one foreachBatch
-    computing all routed outputs from the cached batch and writing each to
-    its own directory (OdsBaseLogApp.scala:93-208 wrote 5 Kafka topics).
+def split_writer(
+    outputs: dict[str, Callable[[DataFrame], DataFrame]],
+    out_root: str,
+    partition_cols: dict[str, str] | None = None,
+):
+    """K1/P11 local equivalent of a topic-split sink, the one fan-out
+    writer of the routing apps (OdsBaseLogApp.scala:93-208 wrote 5 Kafka
+    topics, OdsBaseDbApp.scala:130-163 facts and dims): the callback
+    persists the batch the caller passes (already parsed) once and writes
+    each output to ``<out_root>/<name>/batch=<id>``.
 
-    ``outputs`` maps name -> function(batch_df) -> DataFrame. The batch is
-    persisted once and reused — the reference's pageLogDStream.cache()
-    idiom (DwdDauApp.scala:70,81, P14)."""
+    ``outputs`` maps name -> function(batch_df) -> DataFrame;
+    ``partition_cols`` maps a name to its partition column, if any.
+    Persisting once is the reference's pageLogDStream.cache() idiom
+    (DwdDauApp.scala:70,81, P14): one source scan per batch."""
+    parts = partition_cols or {}
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
             for name, fn in outputs.items():
-                fn(batch_df).write.mode("overwrite").parquet(
-                    os.path.join(out_root, name, f"batch={batch_id}")
+                _write_dir(
+                    fn(batch_df),
+                    os.path.join(out_root, name, f"batch={batch_id}"),
+                    parts.get(name),
                 )
         finally:
             batch_df.unpersist()
@@ -541,14 +534,9 @@ def current_dims(spark, out_root: str) -> DataFrame:
     dims = spark.read.option("basePath", os.path.join(out_root, "dims")).parquet(
         os.path.join(out_root, "dims", "batch=*")
     )
-    w = Window.partitionBy("table", "id").orderBy(
-        F.col("ts").desc(), F.col("batch").desc()
-    )
-    return (
-        dims.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "batch")
-    )
+    return keep_latest(
+        dims, ["table", "id"], [F.col("ts").desc(), F.col("batch").desc()]
+    ).drop("batch")
 
 
 def kafka_frame(df: DataFrame, key_col: str | None = None) -> DataFrame:

@@ -351,3 +351,119 @@ def test_keyset_full_walk_reconstructs_total_order(wide_table, spark):
         walked.extend((r.create_time, r.detail_id) for r in rows)
         cursor = (rows[-1].create_time, rows[-1].detail_id)
     assert walked == full and len(walked) == 3
+
+
+def _serve(dau, wide):
+    from sparkstreaming_realtime_project_spark.http_api import (
+        publisher_server,
+        serve_in_background,
+    )
+
+    server = publisher_server(dau, wide)
+    serve_in_background(server)
+    host, port = server.server_address
+    return server, f"http://{host}:{port}"
+
+
+def test_http_detail_over_date_partitioned_sink(wide_table, spark, tmp_path):
+    """A sink written by idempotent_partitioned_writer and read back
+    through read_sink carries its partition column as DATE; the detail
+    routes (offset and keyset) must still answer 200, with the date as
+    its yyyy-MM-dd string."""
+    from urllib.parse import quote
+
+    from pyspark.sql import functions as F
+
+    from sparkstreaming_realtime_project_spark.streaming.sinks import (
+        idempotent_partitioned_writer,
+        read_sink,
+    )
+
+    out = str(tmp_path / "wide")
+    write = idempotent_partitioned_writer(out, ["detail_id"], "dt")
+    write(wide_table.filter(F.col("detail_id") <= 2), 0)
+    write(wide_table.filter(F.col("detail_id") > 2), 1)
+    server, base = _serve(wide_table, lambda: read_sink(spark, out))
+    q = quote("小米")
+    try:
+        status, out1 = _get(
+            f"{base}/detailByItem?date=2024-01-02&itemName={q}&pageNo=1&pageSize=2"
+        )
+        assert status == 200 and out1["total"] == 3
+        assert [d["detail_id"] for d in out1["detail"]] == [4, 2]
+        assert {d["dt"] for d in out1["detail"]} == {"2024-01-02"}
+        status, out2 = _get(
+            f"{base}/detailByItem?date=2024-01-02&itemName={q}&afterTime=&afterId="
+        )
+        assert status == 200
+        assert [d["detail_id"] for d in out2["detail"]] == [4, 2, 1]
+        assert out2["detail"][0]["dt"] == "2024-01-02"
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
+def test_cli_publisher_serves_order_wide_pipeline_sink(spark, tmp_path):
+    """The `publisher` subcommand's providers over a sink the
+    order-wide pipeline wrote (create_date partition, no dt column), in
+    its batch-dir layout and again after `compact` folded it into a
+    generation: /statsByItem and /detailByItem answer 200 with the
+    pipeline's rows."""
+    from urllib.parse import quote
+
+    from pyspark.sql import functions as F
+
+    from sparkstreaming_realtime_project_spark.__main__ import publisher_providers
+    from sparkstreaming_realtime_project_spark.schemas import (
+        ORDER_DETAIL_SCHEMA,
+        ORDER_INFO_SCHEMA,
+    )
+    from sparkstreaming_realtime_project_spark.sources.streams import file_stream
+    from sparkstreaming_realtime_project_spark.streaming.pipelines import (
+        order_wide_pipeline,
+    )
+    from sparkstreaming_realtime_project_spark.streaming.sinks import compact_sink
+
+    from . import streaming_fixtures as fx
+
+    info, detail = str(tmp_path / "info"), str(tmp_path / "detail")
+    fx.write_order_fixture(info, detail)
+    wide_dir = str(tmp_path / "wide")
+    dim_user, dim_province = fx.dim_frames(spark)
+    writer = order_wide_pipeline(
+        file_stream(spark, info, ORDER_INFO_SCHEMA, max_files_per_trigger=1),
+        file_stream(spark, detail, ORDER_DETAIL_SCHEMA, max_files_per_trigger=1),
+        wide_dir,
+        str(tmp_path / "ck"),
+        dim_user=dim_user,
+        dim_province=dim_province,
+        as_of=F.lit("2024-06-01"),
+    )
+    q = writer.trigger(availableNow=True).start()
+    assert q.awaitTermination(180)
+
+    server, base = _serve(*publisher_providers(spark, str(tmp_path / "dau"), wide_dir))
+    item = quote("小米")
+    try:
+        for compacted in (False, True):
+            if compacted:
+                compact_sink(spark, wide_dir, ["detail_id"], partition_col="create_date")
+            status, stats = _get(
+                f"{base}/statsByItem?itemName={item}&date=2024-01-01&t=gender"
+            )
+            assert status == 200 and stats == [{"name": "女", "value": 150.0}]
+            status, page = _get(
+                f"{base}/detailByItem?date=2024-01-01&itemName={item}&pageNo=1&pageSize=2"
+            )
+            assert status == 200 and page["total"] == 3
+            # create_time DESC (the info's), detail_id ASC
+            assert [d["detail_id"] for d in page["detail"]] == [9101, 9001]
+            assert page["detail"][0]["dt"] == "2024-01-01"
+            status, keyset = _get(
+                f"{base}/detailByItem?date=2024-01-01&itemName={item}&afterTime=&afterId="
+            )
+            assert status == 200
+            assert [d["detail_id"] for d in keyset["detail"]] == [9101, 9001, 9002]
+    finally:
+        server.shutdown()
+        server.server_close()

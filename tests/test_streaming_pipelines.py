@@ -256,6 +256,55 @@ def test_cdc_dim_last_write_wins(spark, cdc_out):
     assert rows[("base_province", "11")]["name"] == "Beijing"  # bootstrap-insert
 
 
+@pytest.mark.parametrize("app", ["log_split", "cdc_route"])
+def test_routing_apps_scan_once_and_write_through_sink_factories(
+    spark, tmp_path, monkeypatch, app
+):
+    """The fan-out apps parse each raw micro-batch ONCE (cached, routed
+    to every output) and write only through the sink factories
+    ``streaming.pipelines`` imports by name — the seam a tracer wraps to
+    time every sink write. A second scan of the raw batch would show as
+    numInputRows above the batch's line count."""
+    from sparkstreaming_realtime_project_spark.streaming import pipelines as P
+
+    written = []
+
+    def counting(factory):
+        def make(*a, **k):
+            write = factory(*a, **k)
+
+            def counted(df, batch_id):
+                written.append(batch_id)
+                write(df, batch_id)
+
+            return counted
+
+        return make
+
+    for name in ("split_writer", "idempotent_partitioned_writer"):
+        monkeypatch.setattr(P, name, counting(getattr(P, name)))
+
+    in_dir, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
+    (fx.write_log_fixture if app == "log_split" else fx.write_cdc_fixture)(in_dir)
+    stream = text_stream(spark, in_dir, max_files_per_trigger=1)
+    if app == "log_split":
+        writer = P.log_split_pipeline(stream, out, ckpt)
+    else:
+        writer = P.cdc_route_pipeline(
+            stream, ["order_info", "order_detail"], ["user_info", "base_province"],
+            out, ckpt,
+        )
+    q = run_to_completion(writer)
+
+    lines = []
+    for f in sorted(os.listdir(in_dir)):
+        with open(os.path.join(in_dir, f)) as fh:
+            lines.append(sum(1 for _ in fh))
+    data = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert [p.numInputRows for p in data] == lines
+    assert sorted(written) == [p.batchId for p in data]
+
+
 def test_kafka_frame_shape(spark):
     """K2/F7: the Kafka sink frame is (topic, key, value) with JSON
     serialization when the payload isn't pre-serialized
